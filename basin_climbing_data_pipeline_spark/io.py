@@ -151,8 +151,13 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     cache.  Tracked caches are released by :func:`release_caches`, which the
     query registry invokes before building the NEXT query — within-query
     reuse runs at memory speed, across queries nothing stays resident.
-    (Parquet spill was measured as the alternative: +0.9 s on
-    simhash_near_pairs at sf0.1 for the round trip; memory wins.)
+    Example: ``pagerank_proximity`` caches its proximity edge list, which
+    every power-method round joins.
+
+    A cache is not free on small inputs: every later stage scans all of its
+    partitions (AQE cannot coalesce a cache scan), so a ~1k-row subtree
+    recomputed per consumer can beat caching it.  Prefer deriving the
+    consumers from one aggregation pass where the plan allows it.
     """
     df.persist()
     with _REGISTRY_LOCK:

@@ -17,8 +17,8 @@ Scale design (the point of this module):
   equi-join on (band, band_signature); true Jaccard verified only for LSH
   candidates — candidates ≪ n², which is what makes 100 TB feasible.
 - SimHash: 16-bit signature from per-word hash bits; the pigeonhole split
-  into 4 nibbles turns hamming≤3 search into 4 equi-joins on (chunk, value),
-  then verify with bit_count(xor).
+  into 4 nibbles turns hamming≤3 search into one equi-join on (lang, chunk,
+  value) over the distinct signatures, then verify with bit_count(xor).
 
 The synthetic corpus has no planted near-dups (max 3-gram Jaccard ≈ 0.05),
 so thresholds are set low enough to exercise candidate-generation + verify
@@ -510,19 +510,10 @@ def simhash_bits_for(
     return min(32, n_chunks * w)
 
 
-def simhash_signatures(
-    spark: SparkSession, sf_dir: str, bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """SimHash at the given width: per distinct word, h32's low ``bits``
-    bits vote ±1 per position; signature bit = vote sum > 0.  The
-    registered query pins bits=SIMHASH_BITS so the oracle's near-dup set is
-    meaningful at test scale; the scale path derives the width from the
-    corpus via :func:`simhash_bits_for` (measured: 1.2x runtime at 4x
-    corpus with derived width vs 8.5x at fixed width)."""
-    # NOTE (round 12): persisting an UNSORTED variant for the pair
-    # generators measured WORSE (2.04 vs 1.70 s 5-rep alternating min at
-    # sf0.1) — the sorted cache's partitioning serves the chunk self-join
-    # better; keep the sorted build for both surfaces
+def _simhash_rows(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """Unordered (doc_id, lang, simhash) rows behind both simhash surfaces.
+    Each vote and the signature are single SQL expressions: building them
+    from chained Column calls cost thousands of py4j round trips per query."""
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
@@ -533,17 +524,26 @@ def simhash_signatures(
         "h32", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
     )
     votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h32"), i).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"v{i}")
+        F.expr(f"sum(IF((shiftright(h32, {i}) & 1) = 1, 1, -1)) AS v{i}")
         for i in range(bits)
     ]
-    agg = hashed.groupBy("doc_id", "lang").agg(*votes)
-    sig = None
-    for i in range(bits):
-        bit = F.when(F.col(f"v{i}") > 0, 1 << i).otherwise(0)
-        sig = bit if sig is None else sig + bit
-    return agg.select("doc_id", "lang", sig.cast("long").alias("simhash")).orderBy("doc_id")
+    # BIGINT terms: at bits=32 the top bit overflows INT (ANSI throws)
+    sig = " + ".join(f"IF(v{i} > 0, {1 << i}L, 0L)" for i in range(bits))
+    return hashed.groupBy("doc_id", "lang").agg(*votes).selectExpr(
+        "doc_id", "lang", f"{sig} AS simhash"
+    )
+
+
+def simhash_signatures(
+    spark: SparkSession, sf_dir: str, bits: int = SIMHASH_BITS
+) -> DataFrame:
+    """SimHash at the given width: per distinct word, h32's low ``bits``
+    bits vote ±1 per position; signature bit = vote sum > 0.  The
+    registered query pins bits=SIMHASH_BITS so the oracle's near-dup set is
+    meaningful at test scale; the scale path derives the width from the
+    corpus via :func:`simhash_bits_for` (measured: 1.2x runtime at 4x
+    corpus with derived width vs 8.5x at fixed width)."""
+    return _simhash_rows(spark, sf_dir, bits).orderBy("doc_id")
 
 
 def simhash_signatures_sql() -> str:
@@ -577,10 +577,23 @@ def simhash_near_pairs(
     bits: int = SIMHASH_BITS,
     max_hamming: int = SIMHASH_MAX_HAMMING,
 ) -> DataFrame:
-    """Near-dup candidates at hamming ≤ max_hamming via the pigeonhole
-    trick: split the signature into max_hamming+1 chunks; any pair within
-    the threshold must agree on ≥1 chunk → one equi-join per chunk on
-    (chunk, value), dedup, verify bit_count(xor).
+    """Near-dup pairs at hamming ≤ max_hamming via the pigeonhole trick:
+    split the signature into max_hamming+1 chunks; any pair within the
+    threshold must agree on ≥1 chunk → one equi-join on (lang, chunk,
+    value), verify bit_count(xor).
+
+    The join runs over DISTINCT signatures, not documents: documents are
+    grouped into one (lang, simhash, [doc_id]) key per signature (about 3x
+    fewer rows on the synthetic corpus, whose word salad concentrates
+    signatures), keys are paired, and the id lists are exploded only for
+    verified pairs.  A key pair agreeing on several chunks joins once per
+    agreeing chunk; keeping it only on its FIRST agreeing chunk (the lowest
+    chunk where a^b is zero) emits each ordered key pair, a key paired with
+    itself included, exactly once — so no distinct shuffle is needed, and
+    ``doc_a < doc_b`` after the explode picks one orientation per doc pair.
+    Nothing is cached: the signature subtree is planned once per join side,
+    but on ~1k-row inputs a cache's fixed partition count (every later stage
+    scans all of them, uncoalesced by AQE) cost more than the recompute.
 
     Scale law (measured by tools/scale_probe.py: 8.5x runtime at 4x corpus):
     at FIXED signature width, chunk-collision candidates grow ~ n²·chunks /
@@ -594,55 +607,27 @@ def simhash_near_pairs(
     n_chunks = max_hamming + 1  # pigeonhole: hamming<=k -> k+1 chunks
     w = bits // n_chunks
     mask = (1 << w) - 1
-    # the signature table is one small row per doc but costs a full word
-    # explode + per-bit vote aggregation to build, and Catalyst plans the
-    # self-join below as two independent subtrees (no exchange reuse across
-    # AQE stages) — cache so it computes once (measured 4.3s -> 1.4s at
-    # sf0.1); tracked, so the registry releases it before the next query
-    sigs = tracked_persist(simhash_signatures(spark, sf_dir, bits))
-    chunks = sigs.select(
-        "doc_id",
-        "lang",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), w * c).bitwiseAND(mask).alias("val"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "lang", "simhash", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
+
+    def chunk(col: str, c: int) -> str:
+        return f"(shiftright({col}, {w * c}) & {mask})"
+
+    vals = ", ".join(chunk("simhash", c) for c in range(n_chunks))
+    first_agree = " ".join(f"WHEN {chunk('x', c)} = 0 THEN {c}" for c in range(n_chunks))
+    keys = (
+        _simhash_rows(spark, sf_dir, bits)
+        .groupBy("lang", "simhash")
+        .agg(F.collect_list("doc_id").alias("ids"))
+        .selectExpr("lang", "simhash", "ids", f"posexplode(array({vals})) AS (chunk, val)")
     )
-    # verify hamming BEFORE the dedup: bit_count is map-side codegen, so the
-    # distinct's shuffle carries only true near-pairs instead of every chunk
-    # collision (collisions grow with bucket occupancy² — at 100 TB the
-    # pre-filter is the difference between shuffling pairs and shuffling
-    # near-dups)
-    hamming = F.expr("bit_count(sig_a ^ sig_b)")
+    a = keys.withColumnsRenamed({"simhash": "sig_a", "ids": "ids_a"})
+    b = keys.withColumnsRenamed({"simhash": "sig_b", "ids": "ids_b"})
     return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .distinct()
+        a.join(b, ["lang", "chunk", "val"])
+        .selectExpr("chunk", "ids_a", "ids_b", "sig_a ^ sig_b AS x")
+        .where(f"chunk = CASE {first_agree} END AND bit_count(x) <= {max_hamming}")
+        .selectExpr("explode(ids_a) AS doc_a", "ids_b", "bit_count(x) AS hamming")
+        .selectExpr("doc_a", "explode(ids_b) AS doc_b", "hamming")
+        .where("doc_a < doc_b")
         .orderBy("doc_a", "doc_b")
     )
 
@@ -1393,11 +1378,11 @@ def simhash_adaptive_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any sf the driver runs this, both engines size the signature from
     the corpus and must agree on the resulting pair set.
 
-    Scale shape: identical to the pinned variant (pigeonhole chunks →
-    equi-joins → hamming verify before distinct), but with per-chunk
-    bucket occupancy held ≈ constant by the derived width, candidate
-    volume stays ~ n·occupancy·chunks — measured 1.2× runtime at 4×
-    corpus vs 6.4× pinned (tools/scale_probe.py).
+    Scale shape: identical to the pinned variant (pigeonhole chunk join
+    over distinct signatures → hamming verify → id-list explode), but
+    with per-chunk bucket occupancy held ≈ constant by the derived width,
+    candidate volume stays ~ n·occupancy·chunks — measured 1.2× runtime
+    at 4× corpus vs 6.4× pinned (tools/scale_probe.py).
 
     Output is the per-hamming-distance pair HISTOGRAM, not raw pairs: the
     word-salad corpus concentrates signatures (719k hamming≤3 pairs at

@@ -1721,6 +1721,10 @@ _ROUND14_OWED: list[str] = [
     "incremental_dedup",  # mixed-orientation slice of materialized minhash_lsh_pairs
     "changeset_merge",  # one range exchange serves the merge window + final orderBy
     "merged_transactions_window",  # same shared-range-exchange shape
+    # simhash pair path rewritten: distinct-signature pairing, no cache
+    "simhash_near_pairs",
+    "simhash_signatures",  # signature built from one SQL expression per vote
+    "simhash_adaptive_near_pairs",  # wraps simhash_near_pairs
 ]
 if len(_ROUND14_FRONT) + len(_ROUND14_OWED) > _WINDOW_SLOTS:
     raise ValueError(

@@ -19,19 +19,53 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# directory holding this package: Python workers (applyInPandas, pandas
+# UDFs, stateful streaming) unpickle functions by module reference, and a
+# worker's path holds the launch directory but not the driver's sys.path
+# edits, so from any other working directory the import failed
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def env_positive_int(name: str, default: int) -> int:
+    """Integer setting from the environment, ``default`` when unset or
+    empty; anything but a positive integer raises a ValueError naming the
+    variable and the value."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
 
 def get_spark(
     app_name: str = "basin-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sp = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+    cpus = env_positive_int("SPARK_GRAFT_CPUS", 32)
+    sp = shuffle_partitions or env_positive_int(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS
     )
-    return configure(
+    spark = configure(
         SparkSession.builder.master(f"local[{cpus}]").appName(app_name),
         shuffle_partitions=sp,
     ).getOrCreate()
+    return _ship_package(spark)
+
+
+def _ship_package(spark: SparkSession) -> SparkSession:
+    """Put the package's parent directory on the Python workers' PYTHONPATH
+    (``sc.environment`` is copied into every Python function the session
+    creates afterwards).  Idempotent."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    return spark
 
 
 # AQE partition-coalescing floor.  The default 1m floor coalesces a
@@ -74,6 +108,7 @@ def configure(builder: SparkSession.Builder, shuffle_partitions: int = DEFAULT_S
 def tune_session(spark: SparkSession) -> SparkSession:
     """Best-effort runtime tuning for an externally-created session (the
     driver hands us one); only touches settings that are runtime-mutable."""
+    _ship_package(spark)
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)),

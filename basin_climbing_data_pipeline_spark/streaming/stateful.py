@@ -15,13 +15,13 @@ sessions equal the batch sessionizer's output.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import env_positive_int
 from .events_stream import stream_events
 
 SESSION_GAP_US = 1800 * 1_000_000
@@ -43,12 +43,12 @@ STATEFUL_STREAM_PARTITIONS_FLOOR = 8
 
 
 def _stateful_stream_partitions(spark: SparkSession) -> int:
-    env = os.environ.get("SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS")
-    if env:
-        return int(env)
-    return max(
-        STATEFUL_STREAM_PARTITIONS_FLOOR,
-        spark.sparkContext.defaultParallelism // 4,
+    return env_positive_int(
+        "SPARK_GRAFT_STATEFUL_STREAM_PARTITIONS",
+        max(
+            STATEFUL_STREAM_PARTITIONS_FLOOR,
+            spark.sparkContext.defaultParallelism // 4,
+        ),
     )
 
 OUTPUT_SCHEMA = (

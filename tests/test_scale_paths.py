@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from basin_climbing_data_pipeline_spark.io import load_table
@@ -127,32 +128,110 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert t.replace(hour=9) not in emitted, emitted
 
 
-def test_simhash_pigeonhole_generalizes_to_wider_signatures(spark, sf_dir):
-    """The chunked candidate join at bits=32 / hamming<=3 must find exactly
-    the pairs a brute-force all-pairs hamming scan finds — the pigeonhole
-    guarantee is width-independent, which is what makes the corpus-derived
-    width (simhash_bits_for) a drop-in scale path."""
-    from pyspark.sql import functions as F
+def _py_simhash(text, bits):
+    """Pure-Python SimHash with the engine's word and hash rules: distinct
+    space-separated words after trimming spaces, empty tokens dropped,
+    h32 = first 8 hex digits of md5; None when the text has no words."""
+    import hashlib
 
+    words = {w for w in (text or "").strip(" ").split(" ") if w}
+    if not words:
+        return None
+    votes = [0] * bits
+    for w in words:
+        h = int(hashlib.md5(w.encode()).hexdigest()[:8], 16)
+        for i in range(bits):
+            votes[i] += 1 if (h >> i) & 1 else -1
+    return sum(1 << i for i in range(bits) if votes[i] > 0)
+
+
+def _degenerate_documents(path):
+    """A small documents table built to stress the signature pairing:
+    texts without words, a double-spaced twin, a four-document group with
+    one word set (hamming 0 within the group), the same word set under
+    other lang values (and NULL), and one-word edits of seeded random
+    texts (near pairs at hamming 1-3)."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    group = "red green blue cyan magenta yellow black white"
+    rows = [
+        (0, "", "en"),
+        (1, "   ", "en"),
+        (2, None, "en"),
+        (3, "delta  epsilon  zeta", "en"),
+        (4, "delta epsilon zeta", "en"),
+        (10, group, "en"),
+        (11, " ".join(reversed(group.split())), "en"),
+        (12, group + " red red", "en"),
+        (13, "  " + group + "  ", "en"),
+        (20, group, "fr"),
+        (21, group, "de"),
+        (22, group, None),
+    ]
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    for k in range(40):
+        words = rng.sample(vocab, 12)
+        lang = rng.choice(["en", "fr"])
+        rows.append((100 + 2 * k, " ".join(words), lang))
+        edited = words[:-1] + [rng.choice(vocab)]
+        rows.append((101 + 2 * k, " ".join(edited), lang))
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": pa.array([r[1] for r in rows], pa.string()),
+                "lang": pa.array([r[2] for r in rows], pa.string()),
+                "source": pa.array(["src0"] * len(rows), pa.string()),
+                "n_chars": pa.array([len(r[1] or "") for r in rows], pa.int64()),
+            }
+        ),
+        str(path / "documents.parquet"),
+    )
+
+
+@pytest.mark.parametrize("bits", [16, 32])
+def test_simhash_pigeonhole_generalizes_to_wider_signatures(spark, sf_dir, tmp_path, bits):
+    """The chunked candidate join must find exactly the pairs a brute-force
+    all-pairs hamming scan finds, each (doc_a, doc_b) once — the pigeonhole
+    guarantee is width-independent, which is what makes the corpus-derived
+    width (simhash_bits_for) a drop-in scale path.  Runs on the shared
+    corpus and on a degenerate one; building the query caches nothing."""
+    from itertools import combinations
+
+    from basin_climbing_data_pipeline_spark import io
     from basin_climbing_data_pipeline_spark.operators import dedup as dd
 
-    bits = 32
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in dd.simhash_near_pairs(spark, sf_dir, bits=bits).collect()
-    }
-    sigs = dd.simhash_signatures(spark, sf_dir, bits=bits)
-    a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"),
-                    F.col("simhash").alias("sig_a"))
-    b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"),
-                    F.col("simhash").alias("sig_b"))
-    brute = (
-        a.join(b, (F.col("doc_a") < F.col("doc_b")) & (F.col("lang_a") == F.col("lang_b")))
-        .withColumn("hamming", F.expr("bit_count(sig_a ^ sig_b)"))
-        .filter(F.col("hamming") <= dd.SIMHASH_MAX_HAMMING)
-    )
-    want = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in brute.collect()}
-    assert got == want
+    _degenerate_documents(tmp_path)
+    for corpus in (sf_dir, str(tmp_path)):
+        io.release_caches()
+        pairs = dd.simhash_near_pairs(spark, corpus, bits=bits)
+        assert not io._TRACKED_CACHES
+        got = [(r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs.collect()]
+        assert len({(a, b) for a, b, _ in got}) == len(got)
+
+        docs = load_table(spark, corpus, "documents").select("doc_id", "text", "lang")
+        sigs = [
+            (r["doc_id"], r["lang"], _py_simhash(r["text"], bits)) for r in docs.collect()
+        ]
+        sigs = sorted(s for s in sigs if s[2] is not None)
+        want = []
+        for (da, la, sa), (db, lb, sb) in combinations(sigs, 2):
+            h = bin(sa ^ sb).count("1")
+            if la is not None and la == lb and h <= dd.SIMHASH_MAX_HAMMING:
+                want.append((da, db, h))
+        assert got == sorted(want)
+
+    by_pair = {(a, b): h for a, b, h in got}
+    assert not {0, 1, 2} & {d for pair in by_pair for d in pair}
+    assert by_pair[(3, 4)] == 0  # double spaces add no empty word
+    group = set(combinations([10, 11, 12, 13], 2))
+    assert all(by_pair[p] == 0 for p in group)
+    # one word set, different lang values: never paired across langs
+    assert not (set(combinations([10, 11, 12, 13, 20, 21, 22], 2)) - group) & set(by_pair)
 
 
 def test_simhash_bits_scale_with_corpus():
