@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -60,6 +61,39 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of a parquet file or directory, inferred once per process.
+
+    Inference (``spark.read.parquet`` without a schema) runs a Spark job that
+    reads the footers, ~0.1 s of fixed cost on every read; a read with the
+    schema given starts none.  The key holds the file's identity from
+    ``os.stat``, so a table rewritten at the same path infers again, and the
+    nanosAsLong setting, which changes how TIMESTAMP(NANOS) columns infer.
+    Threads racing on a new key each infer once and store equal schemas."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    key = (
+        path,
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from :func:`parquet_schema`:
+    no schema-inference job after the first read of a file."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog: {TABLES}")
@@ -67,8 +101,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP(NANOS) parquet is rejected by the vectorized reader;
         # read nanos as long (no-op for other encodings) and normalize.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_event_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -211,7 +245,7 @@ def materialized(name: str):
                             _WAREHOUSE_WRITE_PARTITIONS
                         ).write.mode("overwrite").parquet(path)
                         _MATERIALIZED[key] = path
-            return spark.read.parquet(_MATERIALIZED[key])
+            return read_parquet(spark, _MATERIALIZED[key])
 
         wrapper.__wrapped__ = fn
         return wrapper

@@ -1091,10 +1091,13 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     can drop or link it.  Output: one row per new doc with at least one
     band collision whose verified Jaccard clears JACCARD_THRESHOLD.
 
-    Scale shape: new-side bands (size ∝ batch) equi-join the stored band
-    index (at rest this is a bucketed table; no corpus² term anywhere);
-    verify joins run only on collided pairs; keep-best is one window over
-    the candidate set.
+    Scale shape: the cost is the materialized :func:`minhash_lsh_pairs`
+    build — the band self-join and Jaccard verification over the whole
+    corpus — paid once per process and amortized over every consumer of
+    that table.  Past it, this query is a filtered scan of the stored pairs
+    and one keep-best window over the candidate set.  With
+    SPARK_GRAFT_NO_MATERIALIZE set, every call rebuilds the pair table, so
+    each call pays the full corpus self-join.
 
     ROUND-13 OPTIMIZATION (guide §5 — shared-intermediate reuse, the
     round-12 cluster-labels discipline): the band join + shingle-index

@@ -86,20 +86,34 @@ def _aqe_min_partition_size() -> str:
     )
 
 
+# runtime SQL settings shared by configure() (sessions this engine builds)
+# and tune_session() (a session the driver hands over); the shuffle
+# partition count and the AQE floor are added per call by _runtime_conf
+_RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
+def _runtime_conf(shuffle_partitions: int) -> dict[str, str]:
+    return {
+        **_RUNTIME_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": _aqe_min_partition_size(),
+    }
+
+
 def configure(builder: SparkSession.Builder, shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS):
-    """Apply engine defaults to any builder (also used on driver-provided sessions)."""
+    """Apply engine defaults to a builder: the shared runtime settings plus
+    the ones only a session this engine creates gets (driver memory is
+    fixed at JVM start)."""
+    for k, v in _runtime_conf(shuffle_partitions).items():
+        builder = builder.config(k, v)
     return (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            _aqe_min_partition_size(),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        builder.config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -109,18 +123,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Best-effort runtime tuning for an externally-created session (the
     driver hands us one); only touches settings that are runtime-mutable."""
     _ship_package(spark)
-    for k, v in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        (
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            _aqe_min_partition_size(),
-        ),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-    ]:
+    for k, v in _runtime_conf(DEFAULT_SHUFFLE_PARTITIONS).items():
         try:
             spark.conf.set(k, v)
         except Exception:

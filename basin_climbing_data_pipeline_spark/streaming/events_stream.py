@@ -89,13 +89,14 @@ def _await_finished(q, timeout: int = 300) -> None:
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, ts normalized to TIMESTAMP.
 
-    File streams need the schema up front; peek at the batch footer (a
-    metadata-only read) so the stream adapts to whichever ts encoding the
-    current testdata generation uses (see io.normalize_event_ts)."""
-    from ..io import normalize_event_ts
+    File streams need the schema up front; take it from the batch file
+    (io.parquet_schema, inferred once per file) so the stream adapts to
+    whichever ts encoding the current testdata generation uses (see
+    io.normalize_event_ts)."""
+    from ..io import normalize_event_ts, parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -470,9 +471,9 @@ def streaming_weighted_sample(
     stream = stream_events(spark, sf_dir)
     if max_files_per_trigger is not None:
         # re-read with a per-trigger file cap (test hook for multi-batch folds)
-        from ..io import normalize_event_ts
+        from ..io import normalize_event_ts, parquet_schema
 
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
         raw = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "events*.parquet")

@@ -50,11 +50,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    from basin_climbing_data_pipeline_spark.session import env_positive_int
+
     spark = SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{env_positive_int('SPARK_GRAFT_CPUS', 32)}]"
     ).appName("driver-sim").getOrCreate()
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
     )

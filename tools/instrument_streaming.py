@@ -30,10 +30,11 @@ REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from basin_climbing_data_pipeline_spark.session import env_positive_int
     from basin_climbing_data_pipeline_spark.streaming import events_stream as es
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{env_positive_int('SPARK_GRAFT_CPUS', 32)}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
